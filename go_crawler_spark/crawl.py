@@ -6,8 +6,14 @@ One iteration == one reference "crawl pass" (service/crawler/crawler.go:
     read frontier -> due filter (F9) -> politeness top-k per host (salted)
     -> robots filter -> prefetch guards (F1/F2) -> fetch join vs pages
     (F3/F4) -> pandas-UDF extract (X1-X5, F5-F8) -> explode links
-    -> Bloom+anti-join novelty (J1) -> MERGE frontier / edges (J2, U2)
-    -> MERGE documents (S7) -> update Bloom -> checkpoint iteration
+    -> novelty (J1) -> MERGE frontier / edges (J2, U2)
+    -> MERGE documents (S7) -> checkpoint iteration
+
+Novelty is one exact anti-join of the candidates against the hot
+frontier's keys: no Bloom is probed or updated inside the loop (the
+Bloom path measured slower at every seen-set size tried, see
+``seen.filter_unseen``).  Compaction writes the durable Bloom URL-seen
+table, built from the frontier keys it holds at that point.
 
 The "broadcast to two sinks" stage of the reference (pipeline/runners/
 broadcast.go, graph-updater ∥ text-indexer) becomes checkpoint-once,
@@ -80,7 +86,6 @@ class CrawlConfig:
     bloom_buckets: int = 64
     bloom_capacity_per_bucket: int = 100_000
     bloom_fpp: float = 0.01
-    use_bloom: bool = True
     compact_interval: int = 8  # MoR maintenance cadence (iterations)
     # Bucket count for the frontier/edges/documents state tables (the
     # Iceberg bucket(N, url_hash) layout).  None -> the session's shuffle
@@ -238,7 +243,6 @@ class Crawler:
         self.url_blocklist = url_blocklist
         self.state_path = os.path.join(warehouse, STATE_FILE)
         self.metrics: list[dict] = []
-        self._bloom: DataFrame | None = None  # in-memory Bloom shards
         # In-memory reconciled frontier (one row per url_hash), refreshed
         # per iteration via localCheckpoint: iterations read THIS instead
         # of re-scanning + re-reconciling the growing appended table from
@@ -251,10 +255,6 @@ class Crawler:
         # iterations.  Holds (iteration, futures, partial snaps/metrics).
         self._pending: dict | None = None
         self._sink_pool = None
-        # True after a resume: the in-memory Bloom was seeded from a disk
-        # snapshot that may predate some appends, so Bloom false NEGATIVES
-        # are possible and the frontier refresh must re-verify novelty.
-        self._resumed = False
 
     # -- state / checkpointing ----------------------------------------------
 
@@ -333,7 +333,6 @@ class Crawler:
     def _pin_snapshots(self, record: dict) -> None:
         for name, snap in record["snapshots"].items():
             self.lake.set_current_snapshot(name, snap)
-        self._bloom = None  # reload lazily from the pinned snapshot
         self._frontier = None  # re-reconcile from the pinned snapshot
 
     # -- seeding --------------------------------------------------------------
@@ -388,31 +387,26 @@ class Crawler:
             F.lit(None).cast("timestamp").alias("retrieved_at"),
             F.lit(None).cast("timestamp").alias("last_attempt"),
         ).dropDuplicates(["url_hash"])
+        # Checkpoint first, so the seed plan runs once: the frontier write
+        # and the hot frontier both read its blocks.
+        seeds = seeds.localCheckpoint(eager=True)
 
         snaps = {
-            # dropDuplicates hash-partitioned seeds on url_hash: clustered
+            # the checkpoint keeps dropDuplicates' url_hash partitioning:
+            # clustered
             "frontier": self.lake.overwrite(
                 self.t_frontier, seeds, clustered=self._clustered
             ),
-            "edges": self.lake.overwrite(
-                self.t_edges, self.spark.createDataFrame([], tables.EDGES.schema)
-            ),
-            "documents": self.lake.overwrite(
-                self.t_documents,
-                self.spark.createDataFrame([], tables.DOCUMENTS.schema),
-            ),
+            "edges": self.lake.overwrite_empty(self.t_edges),
+            "documents": self.lake.overwrite_empty(self.t_documents),
         }
-        bloom = seen_ops.empty_bloom(
-            self.spark, self.cfg.bloom_buckets, self.cfg.bloom_capacity_per_bucket,
-            self.cfg.bloom_fpp,
-        )
-        bloom = seen_ops.update_bloom(
-            bloom, seeds, self.cfg.bloom_buckets
-        ).localCheckpoint(eager=True)
-        snaps["bloom"] = self.lake.overwrite(BLOOM_TABLE, bloom)
-        self._bloom = bloom  # kept hot across iterations; disk is checkpoint
-        self._frontier = seeds.localCheckpoint(eager=True)
+        self._frontier = seeds
         self._checkpoint(0, snaps, {"op": "seed"})
+        # A Bloom table left by an earlier crawl in this warehouse holds
+        # none of these seeds; compaction writes this crawl's.  Dropped
+        # only after the seed record, which names no Bloom snapshot, so
+        # every record a resume can pick stays pinnable.
+        self.lake.drop(BLOOM_TABLE.name)
 
     # -- merge-on-read reconciled readers ------------------------------------
 
@@ -475,7 +469,6 @@ class Crawler:
         frontier: DataFrame,
         marks: DataFrame,
         new_rows: DataFrame,
-        exact_new: bool = True,
     ) -> DataFrame:
         """Next iteration's hot frontier, O(delta) instead of O(state).
 
@@ -493,21 +486,13 @@ class Crawler:
         the recrawl steady state, where the previous refresh's join
         preserved it), and unions the new rows.
 
-        Semantics vs the groupBy reconcile: identical for the normal
-        path — in a fresh-crawl run (``exact_new=True``) ``new_rows``
-        keys are EXACTLY anti-joined against the frontier by
-        ``filter_unseen`` (Bloom negatives are definitive, Bloom maybes
-        go through the exact anti-join), so they union in directly.
-        Only a RESUMED run (``exact_new=False``) can see a Bloom false
-        negative — the in-memory Bloom was seeded from a disk snapshot
-        that may predate some appends — and there a seen URL could
-        re-enter ``new_rows``; that path keeps the defensive anti-join
-        (the reconcile MERGED such a duplicate, this path DROPS it — the
-        disk appends still record it, and the disk reconcile absorbs it).
-        Dropping the defensive join from the hot path removes an
-        O(frontier-keys) exchange per iteration AND removes the refresh's
-        dependency on the new-row COUNT, which lets the frontier/edges
-        sinks (the count's source) pipeline across iterations.
+        Semantics vs the groupBy reconcile: identical — ``new_rows``
+        keys are EXACTLY anti-joined against this frontier by
+        ``filter_unseen``, so they union in directly.  Needing no
+        defensive anti-join keeps an O(frontier-keys) exchange off the
+        hot path AND keeps the refresh independent of the new-row COUNT,
+        which lets the frontier/edges sinks (the count's source) pipeline
+        across iterations.
         """
         upd = marks.groupBy("url_hash").agg(
             F.max("retrieved_at").alias("_r"),
@@ -522,16 +507,11 @@ class Crawler:
             F.greatest("retrieved_at", "_r").alias("retrieved_at"),
             F.greatest("last_attempt", "_a").alias("last_attempt"),
         )
-        fresh = new_rows
-        if not exact_new:
-            fresh = fresh.join(
-                frontier.select("url_hash"), "url_hash", "left_anti"
-            )
         # Unconditional union: when no links were discovered the branch
         # scans already-materialized empty checkpoint blocks — O(tasks),
         # no data.  (The old code gated this on the footer-counted n_new,
         # which would serialize the refresh behind the frontier append.)
-        return merged.unionByName(fresh.select(*merged.columns))
+        return merged.unionByName(new_rows.select(*merged.columns))
 
     def read_frontier(self) -> DataFrame:
         """The reconciled frontier: the hot in-memory copy when the loop
@@ -551,13 +531,24 @@ class Crawler:
         """MoR maintenance (Iceberg ``rewrite_data_files``): reconcile and
         rewrite ONLY the buckets that accumulated delta dirs since the
         last compaction — never-appended-to buckets keep their exact
-        files — and flush the in-memory Bloom shards to disk (their
-        durable cadence; staleness in between is safe, see the Bloom
-        refresh note in run_iteration)."""
+        files — and rewrite the durable Bloom URL-seen table from the
+        frontier keys, so it covers every frontier key as of this
+        compaction.  Novelty inside the loop never reads it (it is exact,
+        see run_iteration); its reader is the persisted-state side
+        (``perfbench``'s ``seen.*`` metrics probe it)."""
         # compaction rewrites frontier/edges: any in-flight pipelined
         # appends must commit first (run() already orders this; the
         # guard makes direct compact() calls safe too)
         self._resolve_pending()
+        cfg = self.cfg
+        bloom = seen_ops.update_bloom(
+            seen_ops.empty_bloom(
+                self.spark, cfg.bloom_buckets, cfg.bloom_capacity_per_bucket,
+                cfg.bloom_fpp,
+            ),
+            self.read_frontier().select("url_hash"),
+            cfg.bloom_buckets,
+        )
         c = self._clustered
         snaps = {
             "frontier": self.lake.compact_table(
@@ -569,13 +560,8 @@ class Crawler:
             "documents": self.lake.compact_table(
                 self.t_documents, self._reconcile_documents, clustered=c
             ),
+            "bloom": self.lake.overwrite(BLOOM_TABLE, bloom),
         }
-        if self.cfg.use_bloom:
-            snaps["bloom"] = (
-                self.lake.overwrite(BLOOM_TABLE, self._bloom)
-                if self._bloom is not None
-                else self.lake.current_snapshot("bloom")
-            )
         self._checkpoint(iteration, snaps, {"op": "compact"})
         # Snapshot expiry + orphan vacuum (Iceberg expire_snapshots):
         # without it every superseded delta file is pinned forever and
@@ -733,18 +719,11 @@ class Crawler:
                 F.max("src_priority").alias("src_priority"),
             )
         )
-        if cfg.use_bloom and self._bloom is None:
-            self._bloom = self.lake.read(BLOOM_TABLE)
-        bloom = self._bloom if cfg.use_bloom else None
         # membership check against the cached reconciled frontier — the
         # same key set as the raw appended table, without re-reading it.
+        # Exact: one anti-join, no Bloom probe (see seen.filter_unseen).
         seen_keys = frontier.select("url_hash")
-        new_links = seen_ops.filter_unseen(
-            candidate_urls,
-            seen_keys,
-            bloom,
-            cfg.bloom_buckets,
-        )
+        new_links = seen_ops.filter_unseen(candidate_urls, seen_keys)
         new_rows = (
             _with_url_cols(new_links.select("url", "src_iter", "src_priority"))
             .select(
@@ -890,24 +869,17 @@ class Crawler:
         ))
         t_ph = mark("sink_submit", t_ph)
 
-        # -- state refresh: both LAZY checkpoints over already-materialized
-        # blocks.  No extra jobs here — the next iteration's first consumer
-        # materializes them (and the final iteration never pays for them).
-        if cfg.use_bloom:
-            # In-memory only: the disk Bloom is written at compaction.  A
-            # resume with a stale Bloom stays correct — a Bloom-negative
-            # seen URL is re-appended as "new" and absorbed by the
-            # reconcile (min discovered_iter / max retrieved_at), never
-            # re-fetched before due.
-            self._bloom = seen_ops.update_bloom(
-                bloom, new_rows, cfg.bloom_buckets
-            ).localCheckpoint(eager=cfg.profile_phases)
-            # stale-but-consistent disk snapshot; rewritten at compaction
-            snaps["bloom"] = self.lake.current_snapshot("bloom")
+        # -- state refresh: a LAZY checkpoint over already-materialized
+        # blocks.  No extra job here — the next iteration's first consumer
+        # materializes it (and the final iteration never pays for it).
+        bloom_snap = self.lake.current_snapshot("bloom")
+        if bloom_snap is not None:
+            # the last compaction's snapshot; rewritten at the next one
+            snaps["bloom"] = bloom_snap
         # Next iteration's hot frontier: reconcile(old ∪ this delta),
         # truncated so lineage stays flat across iterations.
         self._frontier = self._refresh_frontier(
-            frontier, marks, new_rows, exact_new=not self._resumed
+            frontier, marks, new_rows
         ).localCheckpoint(eager=cfg.profile_phases)
         mark("state_refresh", t_ph)
 
@@ -947,10 +919,10 @@ class Crawler:
             rp = self.resume_point()
             if rp is None:
                 raise RuntimeError("resume requested but no complete checkpoint")
-            # The persisted Bloom shard layout was built with the
-            # checkpoint's bucket count; a mismatched resume would
-            # silently mis-shard (false negatives past the Bloom, adds
-            # dropped into nonexistent shards).
+            # The persisted Bloom table is sharded by the checkpoint's
+            # bucket count, and its readers probe it with
+            # cfg.bloom_buckets; a mismatched resume would leave it
+            # silently mis-sharded (false negatives past the Bloom).
             have_bb = rp.get("bloom_buckets")
             if have_bb is not None and have_bb != self.cfg.bloom_buckets:
                 raise ValueError(
@@ -959,10 +931,6 @@ class Crawler:
                     "count is immutable per warehouse"
                 )
             self._pin_snapshots(rp)
-            # the disk Bloom snapshot may predate appends (it is only
-            # rewritten at compaction): false negatives possible, so the
-            # frontier refresh keeps its defensive novelty anti-join
-            self._resumed = True
             # one eager reconcile of the pinned snapshot seeds the hot
             # frontier cache (otherwise the first iteration would re-derive
             # the disk reconcile once per consuming job)

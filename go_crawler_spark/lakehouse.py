@@ -246,6 +246,12 @@ class Lakehouse:
         d = self._new_data_dir(spec.name, _conform(df, spec), spec)
         return self._commit(spec, [d], "overwrite")
 
+    def overwrite_empty(self, spec: TableSpec) -> str:
+        """Commit an empty snapshot: no data dir, no Spark job.  ``read``
+        returns an empty frame with the spec schema for it, and appends,
+        merges, compactions and expiry build on it like on any snapshot."""
+        return self._commit(spec, [], "overwrite")
+
     def append(self, spec: TableSpec, df: DataFrame, clustered: bool = False) -> str:
         """Fast-append: new data dir + parent dirs, no rewrite of old data."""
         snap, _ = self.append_counted(spec, df, clustered)
@@ -418,7 +424,7 @@ class Lakehouse:
             return self.overwrite(spec, df)
         m = self._read_manifest(spec.name)
         if m["current"] is None:
-            return self.overwrite(spec, self.spark.createDataFrame([], spec.schema))
+            return self.overwrite_empty(spec)
         dirs = m["snapshots"][m["current"]]["data_dirs"]
         from collections import Counter
 

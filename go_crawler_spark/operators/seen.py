@@ -1,4 +1,4 @@
-"""URL-seen set: partitioned Bloom filter + exact anti-join backstop.
+"""URL-seen set: exact anti-join, plus a partitioned Bloom filter.
 
 Replaces the reference's URL dedup — a CockroachDB UNIQUE constraint probed
 row-at-a-time per upsert (graph/store/cdb/cdb.go:14-18) / an in-memory hash
@@ -7,20 +7,23 @@ index (graph/store/memory/memory.go:20,38) — with the design that survives a
 
 1. the exact membership set is the ``url_seen`` table keyed by
    ``url_hash`` (xxhash64 of the canonical URL);
-2. a **bucket-sharded Bloom filter** (one bitset per ``pmod(url_hash, B)``
-   bucket) pre-filters candidates co-partitioned with their shard via a
-   cogrouped applyInPandas — no bitset is ever replicated per row and no
-   shard ever exceeds one task's memory;
-3. Bloom "maybe" rows — and only those — go through the exact
+2. novelty is ONE ``LEFT ANTI`` join of the candidates against the seen
+   keys — no Python stage at all.  The crawl uses only this path (see
+   :func:`filter_unseen` for the measurements);
+3. a **bucket-sharded Bloom filter** (one bitset per ``pmod(url_hash, B)``
+   bucket) summarizes the seen set; the crawl rewrites it at compaction.
+   Given one, :func:`filter_unseen` pre-filters candidates co-partitioned
+   with their shard via a cogrouped applyInPandas — no bitset is ever
+   replicated per row and no shard ever exceeds one task's memory — and
+   Bloom "maybe" rows — and only those — go through the exact
    ``LEFT ANTI`` join against ``url_seen``.  Bloom negatives are
-   *definitively* new (no false negatives), so the expensive exact join
-   runs on the tiny maybe-set instead of the full candidate stream.
+   *definitively* new (no false negatives).
 
 False-positive safety: a Bloom false positive only routes a genuinely-new
 URL into the exact anti-join, where it survives.  No URL is ever dropped
 by the probabilistic structure alone (tested in tests/test_seen.py).
 
-The filter is maintained incrementally: each iteration ORs the new URLs
+The filter is maintained incrementally: :func:`update_bloom` ORs new URLs
 into the touched shards only (O(new) not O(seen)).
 """
 
@@ -162,41 +165,6 @@ def bloom_probe(candidates: DataFrame, bloom: DataFrame, num_buckets: int) -> Da
     )
 
 
-def unseen_keys(
-    candidate_keys: DataFrame,
-    url_seen: DataFrame,
-    bloom: DataFrame | None = None,
-    num_buckets: int = 64,
-) -> DataFrame:
-    """J1 novelty on KEYS ONLY: the subset of ``candidate_keys``
-    (a 1-column ``url_hash`` frame, unique keys) absent from url_seen.
-
-    The slim kernel behind :func:`filter_unseen`: every byte that moves
-    — the Bloom cogroup shuffle, the Arrow round-trip through the
-    pandas probe, and the exact anti-join backstop — is 8-byte hashes,
-    never candidate payload columns.  Callers recover payloads with a
-    semi-join against the (already url_hash-partitioned) candidate
-    frame, which adds no exchange on the fat side.
-
-    With a Bloom filter: definite-new keys bypass the exact join; only
-    Bloom-maybe keys are anti-joined (false-positive-safe backstop).
-    Without: plain LEFT ANTI hash join.
-    """
-    # SHUFFLE_HASH on the seen side: the membership table grows to the
-    # full URL-seen set (10^10 at the north scale) — broadcasting it would
-    # collect it through the driver every iteration.  A shuffle-hash anti
-    # join partitions both sides on url_hash and scales with the cluster.
-    keys = candidate_keys.select("url_hash")
-    seen = url_seen.select("url_hash").hint("SHUFFLE_HASH")
-    if bloom is None:
-        return keys.join(seen, "url_hash", "left_anti")
-    probed = bloom_probe(keys, bloom, num_buckets)
-    definite_new = probed.where(~F.col("bloom_maybe")).drop("bloom_maybe", "bucket")
-    maybe = probed.where(F.col("bloom_maybe")).drop("bloom_maybe", "bucket")
-    survived = maybe.join(seen, "url_hash", "left_anti")
-    return definite_new.unionByName(survived)
-
-
 def filter_unseen(
     candidates: DataFrame,
     url_seen: DataFrame,
@@ -205,15 +173,45 @@ def filter_unseen(
 ) -> DataFrame:
     """J1 novelty: candidates not present in url_seen (key: url_hash).
 
-    Runs the slim :func:`unseen_keys` kernel over the key column, then
-    recovers full candidate rows with a semi-join — when ``candidates``
-    is hash-partitioned on url_hash (the crawl's candidate aggregation
-    is), the fat side joins exchange-free and only 8-byte keys ever
-    transit the Bloom probe / anti-join shuffles.  Duplicate candidate
-    keys are safe: a semi-join keeps every row whose key survives,
-    exactly as the previous direct anti-join did.
+    Without a Bloom filter (the crawl's path): one LEFT ANTI join of the
+    candidates against the seen keys.  When ``candidates`` is
+    hash-partitioned on url_hash (the crawl's candidate aggregation is),
+    only the seen keys are exchanged.
+
+    With a Bloom filter the probe runs on KEYS ONLY: every byte through
+    the Bloom cogroup shuffle, the Arrow round-trip of the pandas probe
+    and the exact anti-join backstop is 8-byte hashes, never candidate
+    payload columns.  Definite-new keys bypass the exact join; only
+    Bloom-maybe keys are anti-joined (false-positive-safe backstop).  A
+    semi-join against the candidates then recovers the payload rows,
+    exchange-free on the fat side.  Duplicate candidate keys are safe on
+    both paths: every row whose key is unseen is kept.
+
+    The Bloom path still anti-joins its maybe keys against the whole seen
+    set, and adds two cogrouped applyInPandas stages per iteration (probe,
+    then :func:`update_bloom`) with their Arrow round-trips.  Measured at
+    local[4] on a 4-core VM, four shuffle partitions, 64 shards of
+    100,000-key capacity, 10,000 url_hash-partitioned candidates (half
+    seen) against a checkpointed seen set with url strings, median of 3
+    warm runs, seconds:
+
+        seen keys   exact anti-join   Bloom probe   Bloom update
+           10,000              0.29          1.60           0.75
+          100,000              0.24          1.20           0.57
+        1,000,000              0.36          1.32           0.50
+        4,000,000              1.04          1.95           0.54
+
+    The exact join won at every size, so the crawl never probes.
     """
-    fresh = unseen_keys(
-        candidates.select("url_hash"), url_seen, bloom, num_buckets
-    )
+    # SHUFFLE_HASH on the seen side: the membership table grows to the
+    # full URL-seen set (10^10 at the north scale) — broadcasting it would
+    # collect it through the driver every iteration.  A shuffle-hash anti
+    # join partitions both sides on url_hash and scales with the cluster.
+    seen = url_seen.select("url_hash").hint("SHUFFLE_HASH")
+    if bloom is None:
+        return candidates.join(seen, "url_hash", "left_anti")
+    probed = bloom_probe(candidates.select("url_hash"), bloom, num_buckets)
+    definite_new = probed.where(~F.col("bloom_maybe")).drop("bloom_maybe", "bucket")
+    maybe = probed.where(F.col("bloom_maybe")).drop("bloom_maybe", "bucket")
+    fresh = definite_new.unionByName(maybe.join(seen, "url_hash", "left_anti"))
     return candidates.join(fresh.hint("SHUFFLE_HASH"), "url_hash", "left_semi")

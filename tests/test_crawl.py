@@ -403,3 +403,68 @@ def test_all_failed_fetch_iteration_does_not_drain(spark, tmp_warehouse):
     # and the crawl went on to fetch the live seeds afterwards
     docs = {r.url for r in crawler.read_documents().collect()}
     assert set(live) <= docs
+
+
+
+def _bloom_misses(bloom, keys, buckets):
+    """Keys the Bloom filter does not hold (must be none)."""
+    from go_crawler_spark.operators import seen as seen_ops
+
+    probed = seen_ops.bloom_probe(keys.select("url_hash"), bloom, buckets)
+    return probed.where(~F.col("bloom_maybe")).count()
+
+
+def test_compaction_bloom_covers_frontier(spark, tmp_warehouse, synth):
+    """Novelty in the loop is exact and writes no Bloom; compaction writes
+    the durable Bloom table from the frontier keys, so it holds every
+    frontier key, and a resume from a record naming it finishes with the
+    oracle's URL-seen set and depths."""
+    from go_crawler_spark.crawl import BLOOM_TABLE
+
+    pages_df, pages_dict, seeds = synth
+    depth, *_ = oracle_crawl(pages_dict, seeds)
+    cfg = dict(bloom_buckets=8, compact_interval=2)
+    c1 = Crawler(spark, tmp_warehouse, pages_df, CrawlConfig(max_iterations=3, **cfg))
+    c1.run(seed_urls=seeds)
+
+    records = c1._load_state()
+    assert [r["iteration"] for r in records] == [0, 1, 2, 2, 3]
+    assert records[3]["metrics"]["op"] == "compact"
+    # seed and iterations 1-2 record no Bloom; the compaction writes one
+    # and iteration 3 records that snapshot
+    assert ["bloom" in r["snapshots"] for r in records] == [
+        False, False, False, True, True
+    ]
+    snap = records[3]["snapshots"]["bloom"]
+    assert records[4]["snapshots"]["bloom"] == snap
+    bloom = c1.lake.read(BLOOM_TABLE, snap)
+    assert bloom.count() == 8
+    at_compaction = c1.lake.read(c1.t_frontier, records[3]["snapshots"]["frontier"])
+    assert at_compaction.count() > len(set(seeds))
+    assert _bloom_misses(bloom, at_compaction, 8) == 0
+
+    c2 = Crawler(spark, tmp_warehouse, pages_df, CrawlConfig(max_iterations=30, **cfg))
+    c2.run(resume=True)
+    assert _frontier_map(c2) == depth
+    c2.compact(iteration=99)
+    assert _bloom_misses(c2.lake.read(BLOOM_TABLE), c2.read_frontier(), 8) == 0
+
+
+def test_reseed_drops_earlier_bloom(spark, tmp_warehouse, synth):
+    """A re-seed drops the Bloom table an earlier crawl's compaction left
+    in the warehouse (it holds none of the new seeds), after writing the
+    seed record, so the record a resume picks never names it."""
+    pages_df, _, seeds = synth
+    cfg = CrawlConfig(max_iterations=1, bloom_buckets=8)
+    c1 = Crawler(spark, tmp_warehouse, pages_df, cfg)
+    c1.run(seed_urls=seeds[:1])
+    c1.compact(iteration=1)
+    assert c1.lake.current_snapshot("bloom") is not None
+    assert "bloom" in c1.resume_point()["snapshots"]
+
+    c2 = Crawler(spark, tmp_warehouse, pages_df, cfg)
+    c2.seed(seeds[1:])
+    assert c2.lake.current_snapshot("bloom") is None
+    assert "bloom" not in c2.resume_point()["snapshots"]
+    c2.run(resume=True)
+    assert [m["iteration"] for m in c2.metrics] == [1]

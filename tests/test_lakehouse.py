@@ -283,3 +283,39 @@ def test_legacy_bucket_transform_rejected(spark, tmp_warehouse):
         lake.append(spec, _seen(spark, [(9, "http://h/9", T1)]))
     with pytest.raises(ValueError, match="transform"):
         lake.read(spec, buckets=[1])
+
+
+def test_ops_build_on_empty_snapshot(spark, tmp_warehouse):
+    """An empty snapshot commits no data dir and runs no Spark job, yet
+    appends, merges, compactions and expiry build on it like on any
+    snapshot (the crawl seeds its edges/documents tables this way)."""
+    import os
+
+    spec = _bucketed_spec(8)
+    lake = Lakehouse(spark, tmp_warehouse)
+    rows = [(i, f"http://h/{i}", T0) for i in range(20)]
+
+    empty = lake.overwrite_empty(spec)
+    assert _dirs_of(lake, spec) == []
+    assert lake.read(spec).count() == 0
+    assert lake.compact_table(spec) == empty  # nothing to rewrite
+
+    _, n = lake.append_counted(spec, _seen(spark, rows))
+    assert n == 20
+    assert {r.url_hash for r in lake.read(spec).collect()} == set(range(20))
+
+    lake.overwrite_empty(spec)
+    lake.merge_upsert(
+        spec, _seen(spark, rows[:5]), ["url_hash"], greatest_cols=["retrieved_at"]
+    )
+    assert {r.url_hash for r in lake.read(spec).collect()} == set(range(5))
+
+    lake.overwrite_empty(spec)
+    out = lake.expire_snapshots(spec.name, keep_last=1)
+    assert out["expired"] and lake.read(spec).count() == 0
+    # the retained empty snapshot references no data dir: no bucket dir
+    # of the expired snapshots survives
+    assert not [
+        d for d, _, _ in os.walk(lake._table_dir(spec.name))
+        if os.path.basename(d).startswith("_bucket=")
+    ]

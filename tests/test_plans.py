@@ -324,6 +324,33 @@ def test_filter_unseen_probe_is_keys_only(spark):
     assert "LeftSemi" in plan
 
 
+def test_filter_unseen_exact_plan_is_one_anti_join(spark):
+    """Without a Bloom (the crawl's path) the novelty plan is
+    Python-free: no cogrouped pandas stage, no Arrow round-trip, and
+    exactly one join — a LEFT ANTI of the url_hash-partitioned candidates
+    against the seen keys (no keys-only anti-join + semi-join recovery)."""
+    from go_crawler_spark.operators import seen as seen_ops
+
+    cands = spark.createDataFrame(
+        [(i, f"http://h{i%3}.test/p/{i}", f"h{i%3}.test") for i in range(50)],
+        "url_hash long, url string, host string",
+    ).repartition(8, "url_hash")
+    url_seen = spark.createDataFrame([(i,) for i in range(0, 50, 2)], "url_hash long")
+
+    out = seen_ops.filter_unseen(cands, url_seen, None)
+    # before execution: AQE's executed plan would list the join twice
+    # (final and initial plan)
+    plan = plans.formatted_plan(out)
+    assert "FlatMapCoGroupsInPandas" not in plan
+    assert "ArrowEvalPython" not in plan
+    assert len(plans.join_strategies(out)) == 1
+    assert plan.count("Join type: LeftAnti") == 1
+    assert "LeftSemi" not in plan
+
+    assert {r.url_hash for r in out.collect()} == set(range(1, 50, 2))
+    assert set(out.columns) == {"url_hash", "url", "host"}
+
+
 def test_paragraph_dedup_plan_shape(spark):
     """Paragraph dedup must be Python-free, never cartesian, and the
     winner side of the join must be a pre-aggregated HashAggregate (the

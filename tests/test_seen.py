@@ -22,20 +22,20 @@ def test_bloom_no_false_negatives(spark):
 
 
 def test_filter_unseen_exact_semantics(spark):
-    """filter_unseen with Bloom == plain LEFT ANTI join, always."""
+    """filter_unseen with Bloom == plain LEFT ANTI join, always: the same
+    candidate ROWS, payload columns and duplicate keys included (the
+    Bloom path probes keys only and recovers rows by a semi-join)."""
     seen = _urls(spark, range(0, 300))
-    candidates = _urls(spark, range(200, 500))
+    candidates = _urls(spark, list(range(200, 500)) * 2).repartition(BUCKETS, "url_hash")
     bloom = seen_ops.empty_bloom(spark, BUCKETS, capacity_per_bucket=100)
     bloom = seen_ops.update_bloom(bloom, seen, BUCKETS)
 
-    with_bloom = {
-        r.url_hash
-        for r in seen_ops.filter_unseen(candidates, seen, bloom, BUCKETS).collect()
-    }
-    without = {
-        r.url_hash for r in seen_ops.filter_unseen(candidates, seen, None).collect()
-    }
-    assert with_bloom == without == set(range(300, 500))
+    with_bloom = sorted(
+        seen_ops.filter_unseen(candidates, seen, bloom, BUCKETS).collect()
+    )
+    without = sorted(seen_ops.filter_unseen(candidates, seen, None).collect())
+    want = sorted(_urls(spark, list(range(300, 500)) * 2).collect())
+    assert with_bloom == without == want
 
 
 def test_bloom_undersized_still_safe(spark):
